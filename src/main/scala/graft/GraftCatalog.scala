@@ -514,7 +514,7 @@ object GraftCatalog {
   def probeView(s: SparkSession, dir: String, name: String,
       terms: Seq[String]): Unit = {
     val path = InvertedIndexStore.store(s, dir)
-    val files = InvertedIndexStore.filesFor(
+    val files = sources.RangeManifest.filesFor(
       s.read.parquet(InvertedIndexStore.manifestPath(path)), terms)
     require(files.nonEmpty, s"manifest selected no posting files for $terms")
     s.read.parquet(files: _*).createOrReplaceTempView(name)

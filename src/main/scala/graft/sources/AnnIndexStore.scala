@@ -72,22 +72,6 @@ object AnnIndexStore extends QueryPack {
   def codebookPath(p: String): String = p + "/codebook"
   def manifestPath(rel: String): String = rel + ".manifest"
 
-  /** Per-file [min, max] manifest over `keyCol` of the parquet files at
-    * `dataDir`, written to `to` — one distributed aggregate, nothing
-    * collected (the [[InvertedIndexStore.writeManifest]] pattern on a
-    * long key). Shared with the streaming segment refresh
-    * ([[graft.streaming.AnnRefreshSink]]) so both tiers derive
-    * manifests identically. */
-  private[graft] def writeKeyManifest(s: SparkSession, dataDir: String,
-      keyCol: String, to: String): Unit =
-    s.read.parquet(dataDir)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(keyCol).as("mn"), max(keyCol).as("mx"))
-      .write.mode(SaveMode.Overwrite).parquet(to)
-
-  private def writeManifest(s: SparkSession, path: String, keyCol: String): Unit =
-    writeKeyManifest(s, path, keyCol, manifestPath(path))
-
   /** Build every relation from a (vec_id, e: array<double>, n2) frame.
     * Cost: one id-range shuffle (vectors), one code explode + tc-range
     * shuffle (codes), one KMeans fit + cell-range shuffle (cells) —
@@ -98,31 +82,25 @@ object AnnIndexStore extends QueryPack {
     val s = v0.sparkSession
     val v = v0.select(col("vec_id"), col("e"), col("n2"))
 
-    v.repartitionByRange(vecFiles, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.mode(SaveMode.Overwrite).parquet(vectorsPath(path))
-    writeManifest(s, vectorsPath(path), "vec_id")
+    RangeManifest.writeClustered(v, "vec_id", vecFiles, vectorsPath(path),
+      manifestPath(vectorsPath(path)))
 
     val bits = Similarity.LshBits
-    v.select(col("vec_id"), col("e"), col("n2"),
-        posexplode(Similarity.lshCodes(col("e"))).as(Seq("t", "code")))
-      .select((shiftleft(col("t").cast("long"), bits)
-        .bitwiseOR(col("code"))).as("tc"),
-        col("vec_id"), col("e"), col("n2"))
-      .repartitionByRange(codeFiles, col("tc"))
-      .sortWithinPartitions("tc", "vec_id")
-      .write.mode(SaveMode.Overwrite).parquet(codesPath(path))
-    writeManifest(s, codesPath(path), "tc")
+    RangeManifest.writeClustered(
+      v.select(col("vec_id"), col("e"), col("n2"),
+          posexplode(Similarity.lshCodes(col("e"))).as(Seq("t", "code")))
+        .select((shiftleft(col("t").cast("long"), bits)
+          .bitwiseOR(col("code"))).as("tc"),
+          col("vec_id"), col("e"), col("n2")),
+      "tc", codeFiles, codesPath(path), manifestPath(codesPath(path)),
+      sortCols = Seq("tc", "vec_id"))
 
     // the compressed-scan tier: 8-bit codes (8x smaller than the
     // decoded doubles) + the one-row codebook a fresh process needs to
     // quantize QUERIES with the corpus's own affine map — persisted so
     // q54's scan pays neither corpus pass (min/max, quantize) again
-    Similarity.quantizeCorpus(v)
-      .repartitionByRange(vecFiles, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.mode(SaveMode.Overwrite).parquet(quantPath(path))
-    writeManifest(s, quantPath(path), "vec_id")
+    RangeManifest.writeClustered(Similarity.quantizeCorpus(v), "vec_id",
+      vecFiles, quantPath(path), manifestPath(quantPath(path)))
     Similarity.corpusCodebook(v)
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(codebookPath(path))
 
@@ -142,12 +120,10 @@ object AnnIndexStore extends QueryPack {
         org.apache.spark.sql.types.DoubleType, nullable = false)))
     s.createDataFrame(centRows.asJava, centSchema)
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(centroidsPath(path))
-    v.withColumn("cell",
-        graft.ml.KMeans.assign(col("e"), cents).getField("cluster").cast("long"))
-      .repartitionByRange(k, col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode(SaveMode.Overwrite).parquet(cellsPath(path))
-    writeManifest(s, cellsPath(path), "cell")
+    RangeManifest.writeClustered(v.withColumn("cell",
+        graft.ml.KMeans.assign(col("e"), cents).getField("cluster").cast("long")),
+      "cell", k, cellsPath(path), manifestPath(cellsPath(path)),
+      sortCols = Seq("cell", "vec_id"))
     // per-file vec_id blooms over every data relation — the erasure
     // fold's prune input ([[IndexTombstones]]): codes/cells cluster on
     // tc/cell, where a purged vector's rows scatter past any band
@@ -219,23 +195,9 @@ object AnnIndexStore extends QueryPack {
       df: DataFrame): DataFrame =
     IndexTombstones.minus(s, path, df, "vec_id")
 
-  /** Files whose [mn, mx] range in any of `manifests` can contain one
-    * of `keys` — the point-probe file skip, run as a distributed
-    * semi-join against the (bounded) key list; only selected paths
-    * materialize. Multi-manifest so the streaming refresh's per-segment
-    * manifests probe through the SAME rule as the batch store's. */
-  def filesForKeysIn(s: SparkSession, manifests: Seq[String],
-      keys: Seq[Long]): Array[String] = {
-    val m = s.read.parquet(manifests: _*)
-    val kdf = s.createDataset(keys)(org.apache.spark.sql.Encoders.scalaLong)
-      .toDF("k")
-    m.join(broadcast(kdf), col("mn") <= col("k") && col("mx") >= col("k"),
-        "left_semi")
-      .select(col("file")).collect().map(_.getString(0)).sorted
-  }
-
+  /** Files of relation `rel` whose key band can hold one of `keys`. */
   def filesForKeys(s: SparkSession, rel: String, keys: Seq[Long]): Array[String] =
-    filesForKeysIn(s, Seq(manifestPath(rel)), keys)
+    RangeManifest.filesFor(s.read.parquet(manifestPath(rel)), keys)
 
   /** Driver-side IVF cell ranking: the `nprobe` nearest cells to `qe`
     * by squared L2 (the assignment metric), ties by cell index — ONE

@@ -42,17 +42,7 @@ object ColStats extends QueryPack {
     * callers invoke this per commit on the NEW files only; the relation
     * is append-only between vacuums. */
   def append(s: SparkSession, path: String, files: Seq[String],
-      colName: String): Unit = {
-    if (files.isEmpty) return
-    val stats = s.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(colName)).as("mn"), max(col(colName)).as("mx"))
-    val rows = stats.collect()
-      .map(r => Row(VersionedStore.canon(r.getString(0)), r.get(1), r.get(2)))
-      .sortBy(_.getString(0))
-    s.createDataFrame(rows.toSeq.asJava, stats.schema)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(dir(path, colName))
-  }
+      colName: String): Unit = appendAll(s, path, files, Seq(colName))
 
   /** The column's stats relation, one entry per file — resolved
     * DETERMINISTICALLY as the WIDEST interval over any duplicate
@@ -130,8 +120,13 @@ object ColStats extends QueryPack {
     * fresh without any read-path heal. (The vacuum dv fold's rewrite
     * files are the one writer that skips this: they fail open until
     * the next explicit [[append]] — pruning degrades, never breaks.) */
-  def onCommit(s: SparkSession, path: String, files: Seq[String]): Unit = {
-    val want = configured(s, path)
+  def onCommit(s: SparkSession, path: String, files: Seq[String]): Unit =
+    appendAll(s, path, files, configured(s, path))
+
+  /** Stat `files` for every column of `want` in ONE bounded scan and
+    * append each column's (file, mn, mx) rows to its own relation. */
+  private def appendAll(s: SparkSession, path: String, files: Seq[String],
+      want: Seq[String]): Unit = {
     if (want.isEmpty || files.isEmpty) return
     val df = s.read.parquet(files: _*)
     // schema evolution: a batch lacking a configured column just skips

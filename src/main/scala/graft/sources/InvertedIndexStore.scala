@@ -19,11 +19,9 @@ import org.apache.spark.sql.functions._
   *  - `postings`: one row per (term, doc) — term, doc_id, tf, dl —
   *    range-clustered and SORTED on term, so a term-set predicate
   *    prunes at row-group level inside every file it opens;
-  *  - `postings.manifest`: per-file (min term, max term) — the
-  *    [[ManifestStore]] tier, so the planner opens ONLY files whose
-  *    term range can contain a query term (file-level skip; at 100 TB
-  *    the index is many thousands of files and footer-opening every one
-  *    per query would dominate);
+  *  - `postings.manifest`: per-file (min term, max term) bands
+  *    ([[RangeManifest]]), so the planner opens ONLY files whose term
+  *    range can contain a query term;
   *  - `postings.stats`: the one-row corpus aggregate (n_docs,
   *    tot_tokens) BM25's length normalization needs — over ALL
   *    documents, including those sharing no term with the query, which
@@ -88,15 +86,6 @@ object InvertedIndexStore extends QueryPack {
     .agg(count(lit(1)).as("n_docs"),
       sum(size(TextOps.toks(lower(col("text")))).cast("long")).as("tot_tokens"))
 
-  /** Derive the per-file (min term, max term) manifest of the posting
-    * files under `path` and write it to `to` — one aggregate over the
-    * written files, nothing collected. */
-  def writeManifest(s: SparkSession, path: String, to: String): Unit =
-    s.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min("term").as("mn"), max("term").as("mx"))
-      .write.mode(SaveMode.Overwrite).parquet(to)
-
   /** The positional posting relation: (term, doc_id, positions) with
     * positions the SORTED 0-based token offsets — adjacency (phrase)
     * and proximity predicates become integer-array arithmetic on the
@@ -114,27 +103,18 @@ object InvertedIndexStore extends QueryPack {
     * on term. */
   def build(docs: DataFrame, path: String, files: Int): Unit = {
     val s = docs.sparkSession
-    postings(docs)
-      .repartitionByRange(files, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    writeManifest(s, path, manifestPath(path))
+    RangeManifest.writeClustered(postings(docs), "term", files, path,
+      manifestPath(path), sortCols = Seq("term", "doc_id"))
     statsAgg(docs)
       .write.mode(SaveMode.Overwrite).parquet(statsPath(path))
-    positionalPostings(docs)
-      .repartitionByRange(files, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(posPath(path))
-    writeManifest(s, posPath(path), posManifestPath(path))
+    RangeManifest.writeClustered(positionalPostings(docs), "term", files,
+      posPath(path), posManifestPath(path), sortCols = Seq("term", "doc_id"))
     // the doc-length relation (doc_id-clustered + doc_id-range manifest)
     // and per-file doc_id blooms over every relation: the erasure verb's
     // point-read and fold-prune inputs, paid once at build
-    docs.select(col("doc_id"),
-        size(TextOps.toks(lower(col("text")))).cast("long").as("dl"))
-      .repartitionByRange(math.max(1, files / 2), col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(doclensPath(path))
-    AnnIndexStore.writeKeyManifest(s, doclensPath(path), "doc_id",
+    RangeManifest.writeClustered(docs.select(col("doc_id"),
+        size(TextOps.toks(lower(col("text")))).cast("long").as("dl")),
+      "doc_id", math.max(1, files / 2), doclensPath(path),
       doclensManifestPath(path))
     Seq(path, posPath(path), doclensPath(path)).foreach { rel =>
       IndexTombstones.appendBlooms(s, rel,
@@ -154,14 +134,6 @@ object InvertedIndexStore extends QueryPack {
     })
   }
 
-  /** The files whose [min, max] term range can contain any of `terms` —
-    * the per-term point-probe version of [[ManifestStore.filesFor]]'s
-    * range overlap, run as a distributed filter over the manifest table
-    * with only the selected paths materialized. */
-  def filesFor(m: DataFrame, terms: Seq[String]): Array[String] =
-    m.filter(terms.map(t => col("mn") <= t && col("mx") >= t).reduce(_ || _))
-      .select(col("file")).collect().map(_.getString(0)).sorted
-
   // ---- ERASURE (round-15 verdict #1): purge / fold / adjusted stats ----
 
   /** PURGE doc ids from the index, logically and immediately: resolve
@@ -174,8 +146,8 @@ object InvertedIndexStore extends QueryPack {
     * is [[fold]]'s job, at the store's maintenance point. */
   def purge(s: SparkSession, path: String, docIds: Seq[Long]): Unit = {
     if (docIds.isEmpty) return
-    val files = AnnIndexStore.filesForKeysIn(s,
-      Seq(doclensManifestPath(path)), docIds)
+    val files = RangeManifest.filesFor(
+      s.read.parquet(doclensManifestPath(path)), docIds)
     if (files.isEmpty) return // no file can hold any id: nothing present
     val rows = s.read.parquet(files.toIndexedSeq: _*)
       .filter(col("doc_id").isin(docIds: _*))
@@ -245,7 +217,7 @@ object InvertedIndexStore extends QueryPack {
 
   private[graft] def bm25Probe(s: SparkSession, path: String): DataFrame = {
     val terms = graft.operators.Text.Bm25Query
-    val selected = filesFor(s.read.parquet(manifestPath(path)), terms)
+    val selected = RangeManifest.filesFor(s.read.parquet(manifestPath(path)), terms)
     require(selected.nonEmpty, s"manifest selected no posting files for $terms")
     val tf = IndexTombstones.minus(s, path,
       s.read.parquet(selected: _*)
@@ -270,7 +242,7 @@ object InvertedIndexStore extends QueryPack {
   def q86cBooleanIndex(s: SparkSession, dir: String): DataFrame = {
     val terms = graft.operators.Text.Bm25Query
     val path = store(s, dir)
-    val selected = filesFor(s.read.parquet(posManifestPath(path)), terms)
+    val selected = RangeManifest.filesFor(s.read.parquet(posManifestPath(path)), terms)
     require(selected.nonEmpty, s"pos manifest selected no files for $terms")
     booleanPhrase(IndexTombstones.minus(s, path,
       s.read.parquet(selected: _*), "doc_id"), terms)

@@ -1,62 +1,36 @@
 package graft.sources
 
 import graft.{Engine, QueryPack, Tables}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Primary-key point-lookup store — the serving-latency tier the
   * reference gets from Kudu's keyed scans (`KuduContext` single-key
   * reads feeding `initialRDD`, `connected_car/ConnectedCarStreaming
-  * .scala:69-83`; Kudu tables declare a PRIMARY KEY precisely so a get
-  * touches one tablet and one block, not a corpus).
-  *
-  * A batch engine cannot match a B-tree's microseconds, but it can make
-  * a point read cost O(one file's footer + one row group) instead of
-  * O(store) — the same ladder as the rest of the store family, applied
-  * to the key axis:
-  *
-  *  - rows are range-clustered AND sorted on the key, so every file
-  *    owns a disjoint key interval and row-group stats inside it are
-  *    tight (a key predicate skips to one row group, parquet's
-  *    predicate pushdown doing the B-tree's leaf walk);
-  *  - a per-file (min, max) key manifest — the [[ManifestStore]] tier,
-  *    a parquet TABLE, never a driver array — lets planning open ONLY
-  *    the file whose interval contains the key (at 100 TB that is the
-  *    difference between one footer read and a million);
-  *  - a multi-get of k keys reads at most k files of the store,
-  *    independent of store size.
+  * .scala:69-83`). Rows are range-clustered AND sorted on the key, so
+  * each file owns a disjoint key interval; the per-file key-band
+  * manifest ([[RangeManifest]]) lets a k-key multi-get open at most k
+  * files, and the pushed key filter skips to one row group inside each
+  * — O(|keys| files) independent of store size.
   *
   * The latency-gap memo the design owes (SURVEY §7): at sf0.01 the
   * 10-key multi-get opens 10 of 32 files and its read beats the full
   * scan-filter, but every wall is still 100 ms-class — Spark's
   * job-launch + planning floor swamps the saved bytes at toy scale
-  * (the spec prints all three walls). What scales is the FILES/BYTES
-  * contract: the probe's cost is O(|keys| files) independent of store
-  * size, while the scan is O(store) — at 100 TB that is one footer vs a
-  * million. A true ms-class serving path needs a resident index process
-  * (what Kudu IS; no job launch, B-tree in memory); for a batch
-  * analytics engine the pruned probe is the right answer and the
-  * remaining gap is documented, not hidden.
-  *
-  * Results never depend on the manifest (it only narrows which files
-  * are READ), so the probe stays oracle-exact.
+  * (the spec prints all three walls). A true ms-class serving path
+  * needs a resident index process (what Kudu IS); for a batch analytics
+  * engine the pruned probe is the right answer and the remaining gap is
+  * documented, not hidden.
   */
 object KeyedStore extends QueryPack {
 
   def manifestPath(storePath: String): String = storePath + ".manifest"
 
   /** Write `df` clustered+sorted by `key` into `files` range files and
-    * the per-file (min, max) key manifest next to it — one range
-    * shuffle, one aggregate, nothing collected. */
-  def build(df: DataFrame, key: String, path: String, files: Int): Unit = {
-    df.repartitionByRange(files, col(key))
-      .sortWithinPartitions(key)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    df.sparkSession.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(key).as("mn"), max(key).as("mx"))
-      .write.mode(SaveMode.Overwrite).parquet(manifestPath(path))
-  }
+    * the key-band manifest next to it — one range shuffle, one
+    * aggregate, nothing collected. */
+  def build(df: DataFrame, key: String, path: String, files: Int): Unit =
+    RangeManifest.writeClustered(df, key, files, path, manifestPath(path))
 
   /** Per-JVM store cache: dir → store path (build once, probe many —
     * the family's amortization contract). */
@@ -70,12 +44,9 @@ object KeyedStore extends QueryPack {
     })
   }
 
-  /** Files whose key interval contains any of `keys` — the point-probe
-    * planner, a distributed filter over the manifest table with only
-    * the selected paths materialized (bounded by |keys|). */
+  /** Files whose key band can hold any of `keys` ([[RangeManifest]]). */
   def filesFor(m: DataFrame, keys: Seq[Long]): Array[String] =
-    m.filter(keys.map(k => col("mn") <= k && col("mx") >= k).reduce(_ || _))
-      .select(col("file")).collect().map(_.getString(0)).sorted
+    RangeManifest.filesFor(m, keys)
 
   /** The deterministic probe key set: 10 evenly spread positions across
     * the store's key span (keys that miss simply return no row — both

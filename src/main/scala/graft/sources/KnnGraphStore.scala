@@ -122,11 +122,8 @@ object KnnGraphStore extends QueryPack {
               .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
           val nf = math.max(1L, (n * 3 * BytesPerEdge + targetFileBytes - 1)
             / targetFileBytes).toInt
-          edges.repartitionByRange(nf, col("src"))
-            .sortWithinPartitions("src", "dst")
-            .write.mode(SaveMode.Overwrite).parquet(layerPath(path, l))
-          AnnIndexStore.writeKeyManifest(s, layerPath(path, l), "src",
-            manifestPath(layerPath(path, l)))
+          RangeManifest.writeClustered(edges, "src", nf, layerPath(path, l),
+            manifestPath(layerPath(path, l)), sortCols = Seq("src", "dst"))
           IndexTombstones.appendBloomsMulti(s, layerPath(path, l),
             VersionedStore.hadoopLs(s, layerPath(path, l)).toSeq.sorted,
             Seq("src", "dst"))
@@ -148,16 +145,41 @@ object KnnGraphStore extends QueryPack {
   /** Build: the q73b LSH kNN graph, degrees attached, src-clustered
     * into `ceil(edges · BytesPerEdge / targetFileBytes)` range files
     * (sized from the DATA like every store in the family — never a
-    * hardcoded file count), plus the per-file src-range manifest that
+    * hardcoded file count), plus the per-file src-band manifest that
     * makes per-node reads open a file subset, the persisted entry
-    * points, and the sampled upper layers. The edge frame persists
-    * across its count and write so the LSH candidate pipeline runs
-    * once. */
+    * points, and the sampled upper layers. */
   def build(s: SparkSession, dir: String, path: String,
       targetFileBytes: Long): Unit = {
     // degrees ride the bounded top lists (deg = list size) — one pass,
     // no degree self-join over the exploded edges
-    val edges = graft.operators.Similarity.q73bEdgesWithDeg(s, dir)
+    writeEdges(s, graft.operators.Similarity.q73bEdgesWithDeg(s, dir), path,
+      targetFileBytes)
+    // upper layers sample the ANN store's vectors relation — the probe
+    // already scores through that store, so this adds no new dependency
+    val annPath = AnnIndexStore.store(s, dir)
+    buildLayers(s, path,
+      s.read.parquet(AnnIndexStore.vectorsPath(annPath)), targetFileBytes)
+  }
+
+  /** Build a full layered store from an EXPLICIT (vec_id, e, n2) frame —
+    * layer-0 edges from exact within-corpus kNN (the planted-corpus
+    * spec's entry; a production caller with its own vector source and a
+    * corpus above [[MaxLayerExact]] uses [[build]]'s LSH tier instead).
+    * Same layout as [[build]]: edge relation + manifest + entries +
+    * layers. */
+  private[graft] def buildFromVectors(s: SparkSession, vectors: DataFrame,
+      path: String, targetFileBytes: Long): Unit = {
+    writeEdges(s, exactKnnEdgesWithDeg(vectors.filter(col("vec_id") =!= 0L), 3),
+      path, targetFileBytes)
+    buildLayers(s, path, vectors, targetFileBytes)
+  }
+
+  /** Write the layer-0 (src, dst, deg) edge relation with its entry
+    * points, src-band manifest and (src ∪ dst) blooms. The edge frame
+    * persists across its count and writes so its pipeline runs once. */
+  private def writeEdges(s: SparkSession, edges0: DataFrame, path: String,
+      targetFileBytes: Long): Unit = {
+    val edges = edges0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = math.max(1L,
@@ -181,45 +203,9 @@ object KnnGraphStore extends QueryPack {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(entriesPath(path))
     } finally edges.unpersist(false)
-    AnnIndexStore.writeKeyManifest(s, path, "src", manifestPath(path))
+    RangeManifest.write(s, path, "src", manifestPath(path))
     IndexTombstones.appendBloomsMulti(s, path,
       VersionedStore.hadoopLs(s, path).toSeq.sorted, Seq("src", "dst"))
-    // upper layers sample the ANN store's vectors relation — the probe
-    // already scores through that store, so this adds no new dependency
-    val annPath = AnnIndexStore.store(s, dir)
-    buildLayers(s, path,
-      s.read.parquet(AnnIndexStore.vectorsPath(annPath)), targetFileBytes)
-  }
-
-  /** Build a full layered store from an EXPLICIT (vec_id, e, n2) frame —
-    * layer-0 edges from exact within-corpus kNN (the planted-corpus
-    * spec's entry; a production caller with its own vector source and a
-    * corpus above [[MaxLayerExact]] uses [[build]]'s LSH tier instead).
-    * Same layout as [[build]]: edge relation + manifest + entries +
-    * layers. */
-  private[graft] def buildFromVectors(s: SparkSession, vectors: DataFrame,
-      path: String, targetFileBytes: Long): Unit = {
-    val v = vectors.filter(col("vec_id") =!= 0L)
-    val edges = exactKnnEdgesWithDeg(v, 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = math.max(1L,
-        (edges.count() * BytesPerEdge + targetFileBytes - 1) / targetFileBytes)
-        .toInt
-      edges.repartitionByRange(n, col("src"))
-        .sortWithinPartitions("src", "dst")
-        .write.mode(SaveMode.Overwrite).parquet(path)
-      edges.filter(col("src") =!= 0L)
-        .agg(percentile_approx(col("src"),
-          array(lit(0.0), lit(0.25), lit(0.5), lit(0.75)), lit(10000))
-          .as("entries"))
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(entriesPath(path))
-    } finally edges.unpersist(false)
-    AnnIndexStore.writeKeyManifest(s, path, "src", manifestPath(path))
-    IndexTombstones.appendBloomsMulti(s, path,
-      VersionedStore.hadoopLs(s, path).toSeq.sorted, Seq("src", "dst"))
-    buildLayers(s, path, vectors, targetFileBytes)
   }
 
   private val built = scala.collection.mutable.Map.empty[String, String]
@@ -311,7 +297,7 @@ object KnnGraphStore extends QueryPack {
     * q99 point-lookup pattern on the edge relation; the pruning thesis
     * is spec-asserted in KnnGraphStoreSpec). */
   def neighbors(s: SparkSession, path: String, src: Long): DataFrame = {
-    val files = AnnIndexStore.filesForKeysIn(s, Seq(manifestPath(path)), Seq(src))
+    val files = RangeManifest.filesFor(s.read.parquet(manifestPath(path)), Seq(src))
     require(files.nonEmpty, s"node $src not covered by any store file")
     s.read.parquet(files: _*).filter(col("src") === src)
   }
@@ -341,21 +327,6 @@ object KnnGraphStore extends QueryPack {
     graft.operators.Similarity.centralityFromEdges(vertices, edges)
   }
 
-  /** A key-range manifest loaded ONCE into bounded driver state for a
-    * serving loop: the probe prunes each hop's file set in-driver
-    * instead of paying a Spark job per prune — manifests are file-count
-    * bounded (the UpsertSink contract), and an HNSW-style walk is a
-    * SEQUENCE of tiny reads where per-hop job count is the wall. */
-  private def loadManifest(s: SparkSession,
-      p: String): Array[(String, Long, Long)] =
-    s.read.parquet(p).select(col("file"), col("mn"), col("mx")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-
-  private def filesFor(man: Array[(String, Long, Long)],
-      ids: Seq[Long]): Seq[String] =
-    man.filter(t => ids.exists(k => k >= t._2 && k <= t._3))
-      .map(_._1).toIndexedSeq
-
   /** Bounded memo of file-set relations for the serving loop: a beam
     * walk issues tens of tiny pruned reads per probe, and building a
     * fresh parquet relation per hop (file listing + footer schema
@@ -383,11 +354,13 @@ object KnnGraphStore extends QueryPack {
     }
 
   /** Per-hop adjacency of a FRONTIER set — the multi-node [[neighbors]]:
-    * one pruned read per hop (driver-side manifest prune), bounded by
-    * the frontier's owning files, never the edge relation. */
+    * one pruned read per hop, bounded by the frontier's owning files,
+    * never the edge relation. The manifest is loaded ONCE per probe and
+    * pruned in the driver: an HNSW-style walk is a SEQUENCE of tiny
+    * reads where per-hop job count is the wall. */
   private def neighborsOf(s: SparkSession,
-      man: Array[(String, Long, Long)], srcs: Seq[Long]): Array[Long] = {
-    val files = filesFor(man, srcs)
+      man: Array[Band], srcs: Seq[Long]): Array[Long] = {
+    val files = RangeManifest.filesFor(man, srcs)
     if (files.isEmpty) Array.empty
     else readCached(s, files)
       .filter(col("src").isin(srcs: _*))
@@ -400,7 +373,7 @@ object KnnGraphStore extends QueryPack {
     * knob — expansion continues while a new node sits inside the top-ef
     * region; stopping at the k-th best directly converges early and
     * caps recall on a sparse graph). Returns (converged pool, hops). */
-  private def beamSearch(s: SparkSession, man: Array[(String, Long, Long)],
+  private def beamSearch(s: SparkSession, man: Array[Band],
       scoresOf: Seq[Long] => Seq[(Long, Double)], seeds: Seq[Long],
       beam: Int, maxHops: Int, ef: Int,
       dead: Set[Long] = Set.empty): (Seq[(Long, Double)], Int) = {
@@ -468,7 +441,7 @@ object KnnGraphStore extends QueryPack {
     var hops = 0
     var l = maxLayer
     while (l >= 1) {
-      val man = loadManifest(s, manifestPath(layerPath(path, l)))
+      val man = RangeManifest.load(s, manifestPath(layerPath(path, l)))
       // coarse search: tiny beam/ef — the layer only needs to LAND NEAR
       // the query, the refinement happens a level down
       val (pool, h) = beamSearch(s, man, scoresOf, seeds,
@@ -480,7 +453,7 @@ object KnnGraphStore extends QueryPack {
     val seeds0 =
       if (maxLayer == 0) flatSeeds(s, path, dead)
       else seeds
-    val man0 = loadManifest(s, manifestPath(path))
+    val man0 = RangeManifest.load(s, manifestPath(path))
     val (pool, h0) = beamSearch(s, man0, scoresOf, seeds0, beam, maxHops, ef,
       dead = dead)
     (pool.take(k), hops + h0)
@@ -511,9 +484,9 @@ object KnnGraphStore extends QueryPack {
       .select(col("e"), col("n2")).head()
     val qe = qRow.getSeq[Double](0).toArray
     val qn2 = qRow.getDouble(1)
-    val vecMan = loadManifest(s, AnnIndexStore.manifestPath(vectors))
+    val vecMan = RangeManifest.load(s, AnnIndexStore.manifestPath(vectors))
     (ids: Seq[Long]) => {
-      val files = if (ids.isEmpty) Nil else filesFor(vecMan, ids)
+      val files = RangeManifest.filesFor(vecMan, ids)
       if (files.isEmpty) Nil // ids empty OR outside every vec band
       else {
         readCached(s, files)
@@ -557,7 +530,7 @@ object KnnGraphStore extends QueryPack {
       k: Int, beam: Int, maxHops: Int, ef: Int): (Seq[(Long, Double)], Int) = {
     val dead = IndexTombstones.keySet(s, path)
     val entries = flatSeeds(s, path, dead)
-    val man0 = loadManifest(s, manifestPath(path))
+    val man0 = RangeManifest.load(s, manifestPath(path))
     val (pool, hops) = beamSearch(s, man0, scoresOf, entries, beam, maxHops,
       ef, dead = dead)
     (pool.take(k), hops)

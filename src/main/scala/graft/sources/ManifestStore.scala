@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{Engine, Num, QueryPack, Tables}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-statistics manifest — the middle tier of the store family's
@@ -12,40 +12,21 @@ import org.apache.spark.sql.functions._
   * This is the table-format trick (Delta/Iceberg keep exactly such
   * per-file stats in their transaction log): plain parquet makes the
   * planner list and open every file, with skipping only at row-group
-  * level inside each. The manifest — one row per file with min/max of
-  * the clustered key, built by one scan over `input_file_name()` — is
-  * itself a parquet TABLE next to the store, never a driver-held
-  * array: a 100 TB store at 1 GB/file has a 10⁶-row manifest, which is
-  * data, not metadata. Planning runs the overlap predicate as a
-  * distributed filter over that table and only the matching file PATHS
-  * come back to the driver — bounded by the files the query will
-  * actually read (the same contract as Delta/Iceberg planning, whose
-  * driver also materializes the selected file list to construct the
-  * scan, never the full stats log).
-  *
-  * The layout invests one range shuffle at build time (files = key
-  * ranges); the manifest is rebuilt by one cheap aggregate whenever the
-  * store changes — the same contract as the other stores' amortized
-  * builds. Results never depend on the manifest (it only narrows which
-  * files are READ), so the probe query stays oracle-exact.
+  * level inside each. The manifest and its range prune are
+  * [[RangeManifest]]'s; the layout invests one range shuffle at build
+  * time (files = key ranges). Results never depend on the manifest (it
+  * only narrows which files are READ), so the probe query stays
+  * oracle-exact.
   */
 object ManifestStore extends QueryPack {
 
   /** The manifest table's location for a store path. */
   def manifestPath(storePath: String): String = storePath + ".manifest"
 
-  /** Write `ev` clustered by user_id into `files` range files and write
-    * the per-file (min, max) manifest TABLE next to it — one aggregate
-    * over the store straight to parquet, nothing collected. */
-  def build(ev: DataFrame, path: String, files: Int): Unit = {
-    ev.repartitionByRange(files, col("user_id"))
-      .sortWithinPartitions("user_id")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    ev.sparkSession.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min("user_id").as("mn"), max("user_id").as("mx"))
-      .write.mode(SaveMode.Overwrite).parquet(manifestPath(path))
-  }
+  /** Write `ev` clustered by user_id into `files` range files and the
+    * key-band manifest TABLE next to it — nothing collected. */
+  def build(ev: DataFrame, path: String, files: Int): Unit =
+    RangeManifest.writeClustered(ev, "user_id", files, path, manifestPath(path))
 
   def manifest(s: SparkSession, storePath: String): DataFrame =
     s.read.parquet(manifestPath(storePath))
@@ -64,13 +45,6 @@ object ManifestStore extends QueryPack {
     })
   }
 
-  /** Select the manifest files overlapping [lo, hi] — the planner step a
-    * table format runs from its stats log, as a distributed filter over
-    * the manifest table; only the selected paths are materialized. */
-  def filesFor(m: DataFrame, lo: Long, hi: Long): Array[String] =
-    m.filter(col("mx") >= lo && col("mn") <= hi)
-      .select(col("file")).collect().map(_.getString(0)).sorted
-
   /** Cohort rollup planned through the manifest: only files whose
     * [min, max] overlaps the user range are opened at all; the exact
     * predicate still applies inside them. The spec asserts the scan's
@@ -82,7 +56,7 @@ object ManifestStore extends QueryPack {
     val r = m.agg(min(col("mn")), max(col("mx"))).head()
     val (umn, umx) = (r.getLong(0), r.getLong(1))
     val (lo, hi) = (umn + (umx - umn + 1) * 3 / 10, umn + (umx - umn + 1) * 6 / 10)
-    val selected = filesFor(m, lo, hi)
+    val selected = RangeManifest.filesOverlapping(m, lo, hi)
     require(selected.nonEmpty, s"manifest selected no files for [$lo, $hi]")
     s.read.parquet(selected: _*)
       .filter(col("user_id") >= lo && col("user_id") <= hi)

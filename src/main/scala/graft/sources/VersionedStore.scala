@@ -17,10 +17,9 @@ import org.apache.spark.sql.functions._
   *   - an APPEND version's manifest = parent manifest + the new files
   *     (zero data rewritten — the O(delta) ingest contract at any store
   *     size);
-  *   - an UPDATE version copies-on-write ONLY the files whose key range
-  *     owns updated rows (found via per-file min/max stats, the q82
-  *     planning step): every other file is SHARED with the parent
-  *     version byte-for-byte;
+  *   - an UPDATE version copies-on-write ONLY the files whose key band
+  *     ([[RangeManifest]]) owns updated rows: every other file is SHARED
+  *     with the parent version byte-for-byte;
   *   - reading "as of v" lists exactly v's manifest — old versions stay
   *     readable forever (audit/reproducibility: the training run that
   *     read v1 can be replayed against v1 after v3 shipped).
@@ -212,14 +211,12 @@ object VersionedStore extends QueryPack {
     writeManifest(s, path, 2, f2)
 
     // v3: copy-on-write update — adjust the band's amounts by +100
-    // cents. Per-file stats (the q82 planning step) find the OWNING
-    // files; only those rewrite, every other file is shared with v2.
+    // cents. Per-file key bands find the OWNING files; only those
+    // rewrite, every other file is shared with v2.
     val v2df = s.read.parquet(f2.toSeq: _*)
     val (lo, hi) = updateBand(v2df)
-    val stats = v2df.groupBy(input_file_name().as("file"))
-      .agg(min(col("o_custkey")).as("mn"), max(col("o_custkey")).as("mx"))
-    val owning = stats.filter(col("mx") >= lo && col("mn") <= hi)
-      .select(col("file")).collect().map(r => canon(r.getString(0))).toSet
+    val owning = RangeManifest.filesOverlapping(
+      RangeManifest.of(v2df, col("o_custkey")), lo, hi).toSet
     require(owning.nonEmpty && owning.size < f2.size,
       s"degenerate copy-on-write: ${owning.size} of ${f2.size} files own the band")
     s.read.parquet(owning.toSeq: _*)
@@ -871,12 +868,8 @@ object VersionedStore extends QueryPack {
         if (dv.limit(1).count() > 0) {
           import s.implicits._
           val owningAll = retained.flatMap { rv =>
-            val statsDf = fileKeyStats(s, path, rv, keyCol)
-              .toSeq.toDF("file", "mn", "mx")
-            dv.select(keyLong(dv, keyCol).as("k"))
-              .join(broadcast(statsDf),
-                col("k") >= col("mn") && col("k") <= col("mx"))
-              .select(col("file")).distinct().collect().map(_.getString(0))
+            RangeManifest.filesFor(dv, keyCol,
+              RangeManifest.versionBands(s, path, rv, keyCol, heal = true))
           }.distinct.sorted
           // per-file rewrite preserves the file↔manifest sharing
           // structure; a file whose every row was purged maps to None
@@ -957,16 +950,15 @@ object VersionedStore extends QueryPack {
             // would have a crash window with no manifest on disk
             val mf = s.read.parquet(manifestPath(path, rv))
             if (mf.columns.contains("mn")) {
-              val rows = mf.select(col("file"), col("mn"), col("mx")).collect()
-                .flatMap { r =>
-                  val f = r.getString(0)
-                  mapping.get(f) match {
-                    case None => Some((f, r.getLong(1), r.getLong(2)))
-                    case Some(nf) => nf.map((_, r.getLong(1), r.getLong(2)))
+              val rows = mf.select(col("file"), col("mn"), col("mx")).as[Band]
+                .collect().flatMap { b =>
+                  mapping.get(b.file) match {
+                    case None => Some(b)
+                    case Some(nf) => nf.map(f => b.copy(file = f))
                   }
                 }
               IndexTombstones.swapManifest(s, manifestPath(path, rv),
-                rows.sortBy(_._1).toSeq.toDF("file", "mn", "mx"))
+                rows.sortBy(_.file).toSeq.toDF())
             } else {
               val rows = mf.select(col("file")).collect().map(_.getString(0))
                 .flatMap(f => mapping.get(f) match {
@@ -1175,48 +1167,6 @@ object VersionedStore extends QueryPack {
         "mismatched batch would silently match nothing")
   }
 
-  /** Per-file key-range stats of version `v`: (file, mn, mx) in long
-    * key space — read straight off the manifest when the writer carried
-    * them (the upsert-sink stats manifest), rebuilt from the member
-    * files otherwise (one bounded scan, the q82 planning step paid
-    * once). Bands are OVER-approximations by contract: pruning only
-    * needs containment, so a band wider than the file's surviving keys
-    * stays correct.
-    *
-    * The rebuild is a one-time HEAL, not a per-call cost: the rebuilt
-    * bands write back into the version's manifest (same file set, stats
-    * columns added — the UpsertSink self-heal precedent), so the NEXT
-    * planning call against this version reads the k-row stats table and
-    * zero data files (round-13 verdict #3: a purge against a
-    * manifest-only 100 TB store must not pay a full scan per call).
-    * Callers run under the maintenance lease / single-writer
-    * discipline, so the in-place manifest rewrite cannot race another
-    * writer. */
-  private[graft] def fileKeyStats(s: SparkSession, path: String, v: Int,
-      keyCol: String): Array[(String, Long, Long)] = {
-    val mf = s.read.parquet(manifestPath(path, v))
-    if (mf.columns.contains("mn") && mf.columns.contains("mx"))
-      mf.select(col("file"), col("mn"), col("mx")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    else {
-      val files = mf.select(col("file")).collect().map(_.getString(0))
-      if (files.isEmpty) Array.empty
-      else {
-        val data = s.read.parquet(files.toIndexedSeq: _*)
-        val rebuilt = data
-          .groupBy(input_file_name().as("file"))
-          .agg(min(keyLong(data, keyCol)).as("mn"),
-            max(keyLong(data, keyCol)).as("mx"))
-          .collect()
-          .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
-        import s.implicits._
-        rebuilt.sortBy(_._1).toSeq.toDF("file", "mn", "mx")
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(path, v))
-        rebuilt
-      }
-    }
-  }
-
   /** Per-FILE key blooms as a shared SIDE relation (file, bloom) —
     * round-14 verdict #3. A bloom is a property of an immutable data
     * file, so it lives OUTSIDE the per-version manifests and is shared
@@ -1273,25 +1223,26 @@ object VersionedStore extends QueryPack {
       }
     }
 
-  /** BLOOM-extended per-file stats of version `v` as a broadcast-ready
+  /** BLOOM-extended key bands of version `v` as a broadcast-ready
     * (file, mn, mx, bloom) frame — the planning input for the erasure
     * commits: bands alone admit every file a SCATTERED key batch's
     * range overlaps, so the presence check reads every owning file's
     * key column; the per-file bloom lets the planner subtract files
     * that hold no probed key before any data file opens (zero false
-    * negatives — [[KeyBloom]]). Files still missing a bloom are scanned
-    * once here and their blooms appended to the side relation; a file
-    * whose bloom is absent for any reason joins as null = might-contain
-    * (fail open). WRITE-PATH ONLY (lease-holding callers). */
+    * negatives — [[KeyBloom]]). A band-less manifest is healed
+    * ([[RangeManifest.versionBands]]); files still missing a bloom are
+    * scanned once here and their blooms appended to the side relation;
+    * a file whose bloom is absent for any reason joins as null =
+    * might-contain (fail open). WRITE-PATH ONLY (lease-holding callers). */
   private[graft] def fileKeyStatsBloomed(s: SparkSession, path: String, v: Int,
       keyCol: String): DataFrame = {
     import s.implicits._
-    val bands = fileKeyStats(s, path, v, keyCol)
-    val bandsDf = bands.toSeq.toDF("file", "mn", "mx")
+    val bands = RangeManifest.versionBands(s, path, v, keyCol, heal = true)
+    val bandsDf = bands.toSeq.toDF()
     val have = readBlooms(s, path)
       .map(_.select(col("file")).collect().map(_.getString(0)).toSet)
       .getOrElse(Set.empty)
-    appendBlooms(s, path, bands.map(_._1).filterNot(have).toIndexedSeq, keyCol)
+    appendBlooms(s, path, bands.map(_.file).filterNot(have).toIndexedSeq, keyCol)
     val blooms = readBlooms(s, path)
       .getOrElse(Seq.empty[(String, Array[Byte])].toDF("file", "bloom"))
     bandsDf.join(blooms, Seq("file"), "left_outer")
@@ -1307,7 +1258,7 @@ object VersionedStore extends QueryPack {
       keyCol: String): Seq[String] =
     keys.select(keyLong(keys, keyCol).as("k")).distinct()
       .join(broadcast(statsDf),
-        col("k") >= col("mn") && col("k") <= col("mx") &&
+        RangeManifest.holds(col("k")) &&
           KeyBloom.mightContainCol(col("bloom"), col("k")))
       .select(col("file")).distinct().collect()
       .map(_.getString(0)).toSeq.sorted
@@ -1427,11 +1378,10 @@ object VersionedStore extends QueryPack {
     * key band can contain a purged key and shares every other file
     * byte-for-byte with the parent.
     *
-    *  - PLANNING is the stats-manifest prune ([[fileKeyStats]]): the
-    *    erasure batch's distinct keys broadcast against the k-row
-    *    per-file band table, so cost is bounded by the OWNING files —
-    *    at 100 TB a thousand-key erasure touches the handful of files
-    *    that own those key ranges, never the store;
+    *  - PLANNING is the band+bloom prune ([[fileKeyStatsBloomed]]), so
+    *    cost is bounded by the OWNING files — at 100 TB a thousand-key
+    *    erasure touches the handful of files that own those keys, never
+    *    the store;
     *  - the REWRITE is one anti-join of the owning files' rows against
     *    the key list, range-reclustered into at most `owning` files;
     *  - the COMMIT claims its slot atomically ([[claimVersion]]) and,
@@ -1475,8 +1425,10 @@ object VersionedStore extends QueryPack {
       // planning stats with per-file blooms (heals the manifest if they
       // are missing — one bounded scan, then k-row reads forever after)
       val statsDf = fileKeyStatsBloomed(s, path, cur, keyCol)
-      val stats = statsDf.collect().map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2), r.getAs[Array[Byte]](3)))
+      val bands = {
+        import s.implicits._
+        statsDf.select(col("file"), col("mn"), col("mx")).as[Band].collect()
+      }
       // owning = band overlap AND bloom membership: a scattered batch
       // overlaps every band, but only files whose bloom admits at least
       // one probed key are candidates — the rest never open
@@ -1521,27 +1473,14 @@ object VersionedStore extends QueryPack {
         else {
           val newFiles = hadoopLs(s, outDir)
           val ownSet = owning.toSet
-          val sharedStats = stats.filterNot(t => ownSet(t._1))
-          import s.implicits._
           // rewritten files get fresh bands in the manifest and their
           // blooms appended ONCE to the shared side relation (they sit
           // in executor cache from the rewrite); shared files keep both
-          val newStats =
-            if (newFiles.isEmpty) Array.empty[(String, Long, Long)]
-            else {
-              val nd = s.read.parquet(newFiles.toIndexedSeq: _*)
-              nd.groupBy(input_file_name().as("file"))
-                .agg(min(keyLong(nd, keyCol)).as("mn"),
-                  max(keyLong(nd, keyCol)).as("mx"))
-            }
-              .collect()
-              .map(r => (canon(r.getString(0)), r.getLong(1), r.getLong(2)))
+          val newBands = RangeManifest.collect(s, newFiles.toIndexedSeq, keyCol)
           appendBlooms(s, path, newFiles.toSeq.sorted, keyCol)
           ColStats.onCommit(s, path, newFiles.toSeq.sorted)
-          (sharedStats.map(t => (t._1, t._2, t._3)) ++ newStats).sortBy(_._1)
-            .toSeq.toDF("file", "mn", "mx")
-            .coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(manifestPath(path, v))
+          RangeManifest.writeVersion(s, path, v,
+            bands.filterNot(b => ownSet(b.file)).toSeq ++ newBands)
           writeMaintenanceTxn(s, path, v, "delete")
           requireNoLineageGap(s, path, cur, v)
           done = Some(v)
@@ -2109,14 +2048,8 @@ object VersionedStore extends QueryPack {
           .repartitionByRange(12, col("o_custkey"))
           .sortWithinPartitions("o_custkey")
           .write.mode(SaveMode.Overwrite).parquet(dp)
-        import s.implicits._
-        s.read.parquet(dp)
-          .groupBy(input_file_name().as("file"))
-          .agg(min(col("o_custkey")).as("mn"), max(col("o_custkey")).as("mx"))
-          .collect().map(x => (canon(x.getString(0)), x.getLong(1), x.getLong(2)))
-          .sortBy(_._1).toSeq.toDF("file", "mn", "mx")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(manifestPath(path, 1))
+        RangeManifest.writeVersion(s, path, 1,
+          RangeManifest.collect(s, Seq(dp), "o_custkey"))
         deleteCommitDv(s, path, purgeKeys(s, dir), "o_custkey")
       }
       path
@@ -2183,14 +2116,8 @@ object VersionedStore extends QueryPack {
     // the dv delta v1 -> v2: v1 predates the vector, so the delta IS v2's
     val purged = dvAt(s, path, 2).getOrElse(
       throw new IllegalStateException("dv store lacks its v2 vector"))
-    val stats = fileKeyStats(s, path, 2, "o_custkey")
-    val statsDf = {
-      import s.implicits._
-      stats.toSeq.toDF("file", "mn", "mx")
-    }
-    val owning = purged.select(col("o_custkey").cast("long").as("k"))
-      .join(broadcast(statsDf), col("k") >= col("mn") && col("k") <= col("mx"))
-      .select(col("file")).distinct().collect().map(_.getString(0)).sorted
+    val owning = RangeManifest.filesFor(purged, "o_custkey",
+      RangeManifest.versionBands(s, path, 2, "o_custkey", heal = true))
     val removedRows = s.read.parquet(owning.toIndexedSeq: _*)
       .join(purged, Seq("o_custkey"), "left_semi")
     val part = removedRows.groupBy(col("o_custkey"))

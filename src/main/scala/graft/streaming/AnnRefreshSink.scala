@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.functions.VectorOps._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.RangeManifest
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -44,10 +45,6 @@ object AnnRefreshSink {
   private[graft] def liveSegments(s: SparkSession, path: String): Seq[Segments.Seg] =
     Segments.liveSegments(s, path, commitDir(path))
 
-  private def writeCellManifest(s: SparkSession, dataDir: String,
-      to: String): Unit =
-    graft.sources.AnnIndexStore.writeKeyManifest(s, dataDir, "cell", to)
-
   /** Index one micro-batch of (vec_id, e: array<double>) as an
     * immutable cell-clustered segment under the STABLE centroids. */
   def appendBatch(batch: DataFrame, path: String, batchId: Long,
@@ -56,16 +53,13 @@ object AnnRefreshSink {
     if (Segments.mergeCovered(batch.sparkSession, path, commitDir(path),
         batchId)) return
     val seg = Segments.segName(batchId)
-    batch
-      .select(col("vec_id"), col("e"))
-      .withColumn("n2", norm2(col("e")))
-      .withColumn("cell",
-        graft.ml.KMeans.assign(col("e"), cents).getField("cluster").cast("long"))
-      .repartitionByRange(segFiles, col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/$seg")
-    writeCellManifest(batch.sparkSession, s"$path/$seg",
-      s"${manifestPath(path)}/$seg")
+    RangeManifest.writeClustered(batch
+        .select(col("vec_id"), col("e"))
+        .withColumn("n2", norm2(col("e")))
+        .withColumn("cell",
+          graft.ml.KMeans.assign(col("e"), cents).getField("cluster").cast("long")),
+      "cell", segFiles, s"$path/$seg", s"${manifestPath(path)}/$seg",
+      sortCols = Seq("cell", "vec_id"))
   }
 
   /** Maintain the segmented vector index from a stream of
@@ -92,8 +86,8 @@ object AnnRefreshSink {
     // segments' manifests — one implementation, no parity drift
     val probed = graft.sources.AnnIndexStore.rankCells(
       cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq, qe, nprobe)
-    val files = graft.sources.AnnIndexStore.filesForKeysIn(s,
-      live.map(sg => s"${manifestPath(path)}/${sg.name}"), probed)
+    val files = RangeManifest.filesFor(s.read.parquet(
+      live.map(sg => s"${manifestPath(path)}/${sg.name}"): _*), probed)
     require(files.nonEmpty, "manifest selected no cell files")
     val qn2 = qe.map(x => x * x).sum
     // tombstone-aware: purged vectors are unservable the moment the
@@ -138,7 +132,7 @@ object AnnRefreshSink {
         .repartitionByRange(n, col("cell"))
         .sortWithinPartitions("cell", "vec_id"),
       commitArtifacts = (seg, _) =>
-        writeCellManifest(s, s"$path/$seg", s"${manifestPath(path)}/$seg"))
+        RangeManifest.write(s, s"$path/$seg", "cell", s"${manifestPath(path)}/$seg"))
     if (merged.nonEmpty && tombs.nonEmpty)
       graft.sources.IndexTombstones.clear(s, path)
     merged

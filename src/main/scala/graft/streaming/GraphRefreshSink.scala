@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.functions.VectorOps._
-import graft.sources.{IndexTombstones, KnnGraphStore}
+import graft.sources.{IndexTombstones, KnnGraphStore, RangeManifest}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -69,13 +69,9 @@ object GraphRefreshSink {
     if (Segments.mergeCovered(batch.sparkSession, path, commitDir(path),
         batchId)) return
     val seg = Segments.segName(batchId)
-    batch.select(col("vec_id"), col("e"))
-      .withColumn("n2", norm2(col("e")))
-      .repartitionByRange(segFiles, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/$seg")
-    graft.sources.AnnIndexStore.writeKeyManifest(batch.sparkSession,
-      s"$path/$seg", "vec_id", s"${manifestPath(path)}/$seg")
+    RangeManifest.writeClustered(
+      batch.select(col("vec_id"), col("e")).withColumn("n2", norm2(col("e"))),
+      "vec_id", segFiles, s"$path/$seg", s"${manifestPath(path)}/$seg")
   }
 
   /** Maintain the segmented vector store from a stream of (vec_id, e). */
@@ -209,8 +205,8 @@ object GraphRefreshSink {
         val scorer: Seq[Long] => Seq[(Long, Double)] = ids =>
           if (ids.isEmpty) Nil
           else {
-            val files = graft.sources.AnnIndexStore.filesForKeysIn(
-              s, mans, ids)
+            val files = RangeManifest.filesFor(
+              s.read.parquet(mans: _*), ids)
             if (files.isEmpty) Nil
             else s.read.parquet(files.toIndexedSeq: _*)
               .filter(col("vec_id").isin(ids: _*))
@@ -252,6 +248,6 @@ object GraphRefreshSink {
       recluster = (df, n) => df.repartitionByRange(n, col("vec_id"))
         .sortWithinPartitions("vec_id"),
       commitArtifacts = (seg, _) =>
-        graft.sources.AnnIndexStore.writeKeyManifest(s, s"$path/$seg",
+        RangeManifest.write(s, s"$path/$seg",
           "vec_id", s"${manifestPath(path)}/$seg"))
 }

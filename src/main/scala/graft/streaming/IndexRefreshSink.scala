@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.InvertedIndexStore
+import graft.sources.{InvertedIndexStore, RangeManifest}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,36 +94,25 @@ object IndexRefreshSink {
     // double-count them; skipping preserves exactly-once across merges
     if (Segments.mergeCovered(batch.sparkSession, path, commitDir(path), batchId)) return
     val seg = segName(batchId)
-    InvertedIndexStore.postings(batch)
-      .repartitionByRange(segFiles, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/$seg")
-    InvertedIndexStore.writeManifest(batch.sparkSession, s"$path/$seg",
-      s"${InvertedIndexStore.manifestPath(path)}/$seg")
+    RangeManifest.writeClustered(InvertedIndexStore.postings(batch), "term",
+      segFiles, s"$path/$seg", s"${InvertedIndexStore.manifestPath(path)}/$seg",
+      sortCols = Seq("term", "doc_id"))
     // the POSITIONAL segment rides the same lifecycle: written (with
     // its manifest) BEFORE the stats row, so the one commit marker
     // covers both relations and phrase probes never see a segment
     // whose positions are missing
-    InvertedIndexStore.positionalPostings(batch)
-      .repartitionByRange(segFiles, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${InvertedIndexStore.posPath(path)}/$seg")
-    InvertedIndexStore.writeManifest(batch.sparkSession,
-      s"${InvertedIndexStore.posPath(path)}/$seg",
-      s"${InvertedIndexStore.posManifestPath(path)}/$seg")
+    RangeManifest.writeClustered(InvertedIndexStore.positionalPostings(batch),
+      "term", segFiles, s"${InvertedIndexStore.posPath(path)}/$seg",
+      s"${InvertedIndexStore.posManifestPath(path)}/$seg",
+      sortCols = Seq("term", "doc_id"))
     // per-segment doc lengths + doc_id manifest (before the stats row,
     // so the one commit marker covers them): purge resolves purged
     // docs' lengths by point read across live segments
-    batch.select(col("doc_id"),
+    RangeManifest.writeClustered(batch.select(col("doc_id"),
         size(graft.functions.TextOps.toks(lower(col("text"))))
-          .cast("long").as("dl"))
-      .repartitionByRange(math.max(1, segFiles / 2), col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${InvertedIndexStore.doclensPath(path)}/$seg")
-    graft.sources.AnnIndexStore.writeKeyManifest(batch.sparkSession,
-      s"${InvertedIndexStore.doclensPath(path)}/$seg", "doc_id",
+          .cast("long").as("dl")),
+      "doc_id", math.max(1, segFiles / 2),
+      s"${InvertedIndexStore.doclensPath(path)}/$seg",
       s"${InvertedIndexStore.doclensManifestPath(path)}/$seg")
     InvertedIndexStore.statsAgg(batch)
       .write.mode(SaveMode.Overwrite)
@@ -173,19 +162,17 @@ object IndexRefreshSink {
         .repartitionByRange(n, col("term"))
         .sortWithinPartitions("term", "doc_id"),
       commitArtifacts = (seg, live) => {
-        InvertedIndexStore.writeManifest(s, s"$path/$seg",
+        RangeManifest.write(s, s"$path/$seg", "term",
           s"${InvertedIndexStore.manifestPath(path)}/$seg")
         // fold the positional segments too (a doc's positions live in
         // exactly one segment, so the union IS the merged relation) —
         // before the stats commit, so the marker covers the pos merge
         val posDir = s"${InvertedIndexStore.posPath(path)}/$seg"
-        minusDocs(s.read.parquet(live.map(sg =>
-            s"${InvertedIndexStore.posPath(path)}/${sg.name}"): _*))
-          .repartitionByRange(math.max(1, live.size / 2), col("term"))
-          .sortWithinPartitions("term", "doc_id")
-          .write.mode(SaveMode.Overwrite).parquet(posDir)
-        InvertedIndexStore.writeManifest(s, posDir,
-          s"${InvertedIndexStore.posManifestPath(path)}/$seg")
+        RangeManifest.writeClustered(minusDocs(s.read.parquet(live.map(sg =>
+            s"${InvertedIndexStore.posPath(path)}/${sg.name}"): _*)),
+          "term", math.max(1, live.size / 2), posDir,
+          s"${InvertedIndexStore.posManifestPath(path)}/$seg",
+          sortCols = Seq("term", "doc_id"))
         // fold the doclens segments (skip pre-doclens legacy segments:
         // their docs fail open in purge resolution, never break reads)
         val f = Segments.fs(s, path)
@@ -194,11 +181,8 @@ object IndexRefreshSink {
           .filter(d => f.exists(new org.apache.hadoop.fs.Path(d)))
         if (dlDirs.nonEmpty) {
           val dlDir = s"${InvertedIndexStore.doclensPath(path)}/$seg"
-          minusDocs(s.read.parquet(dlDirs: _*))
-            .repartitionByRange(math.max(1, live.size / 2), col("doc_id"))
-            .sortWithinPartitions("doc_id")
-            .write.mode(SaveMode.Overwrite).parquet(dlDir)
-          graft.sources.AnnIndexStore.writeKeyManifest(s, dlDir, "doc_id",
+          RangeManifest.writeClustered(minusDocs(s.read.parquet(dlDirs: _*)),
+            "doc_id", math.max(1, live.size / 2), dlDir,
             s"${InvertedIndexStore.doclensManifestPath(path)}/$seg")
         }
         val statsSum = s.read.parquet(live.map(sg =>
@@ -252,7 +236,7 @@ object IndexRefreshSink {
         s"${InvertedIndexStore.doclensManifestPath(path)}/${sg.name}")
       .filter(m => f.exists(new org.apache.hadoop.fs.Path(m)))
     if (mans.isEmpty) return
-    val files = graft.sources.AnnIndexStore.filesForKeysIn(s, mans, docIds)
+    val files = RangeManifest.filesFor(s.read.parquet(mans: _*), docIds)
     if (files.isEmpty) return
     val rows = s.read.parquet(files.toIndexedSeq: _*)
       .filter(col("doc_id").isin(docIds: _*))
@@ -272,7 +256,7 @@ object IndexRefreshSink {
     require(live.nonEmpty, s"no committed segments under $path")
     val m = s.read.parquet(live.map(sg =>
       s"${InvertedIndexStore.manifestPath(path)}/${sg.name}"): _*)
-    val selected = InvertedIndexStore.filesFor(m, terms)
+    val selected = RangeManifest.filesFor(m, terms)
     require(selected.nonEmpty, s"no posting files can contain $terms")
     // tombstone-aware (an unpurged store pays one existence probe):
     // candidates anti-joined, summed stats adjusted by the purged docs'
@@ -308,7 +292,7 @@ object IndexRefreshSink {
     require(live.nonEmpty, s"no committed segments under $path")
     val m = s.read.parquet(live.map(sg =>
       s"${InvertedIndexStore.posManifestPath(path)}/${sg.name}"): _*)
-    val selected = InvertedIndexStore.filesFor(m, terms)
+    val selected = RangeManifest.filesFor(m, terms)
     require(selected.nonEmpty, s"no positional files can contain $terms")
     InvertedIndexStore.booleanPhrase(graft.sources.IndexTombstones.minus(
       s, path, s.read.parquet(selected: _*), "doc_id"), terms)

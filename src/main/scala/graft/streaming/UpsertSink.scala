@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.VersionedStore
+import graft.sources.{Band, RangeManifest, VersionedStore}
 import graft.streaming.Streams.EntityUpdate
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
@@ -13,26 +13,25 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   * sendEntityToKudu (newInsert for New, newUpdate for Modified) and the
   * kudu client session around it. Kudu's row-level upsert is re-expressed
   * as a COPY-ON-WRITE KEYED COMMIT into the [[VersionedStore]] layout:
-  * every micro-batch rewrites ONLY the data files whose key range the
-  * batch touches (located through per-file key stats carried in the
-  * manifest — the q82 planning step, paid at write time instead of a
-  * store scan), carries every untouched file forward by reference, and
-  * commits a new manifest + txn marker (the [[VersionedCommitSink]]
-  * exactly-once discipline: a checkpoint-replayed batch id is skipped).
+  * every micro-batch rewrites ONLY the data files whose key band the
+  * batch touches (the manifest's [[RangeManifest]] bands, paid at write
+  * time instead of a store scan), carries every untouched file forward
+  * by reference, and commits a new manifest + txn marker (the
+  * [[VersionedCommitSink]] exactly-once discipline: a
+  * checkpoint-replayed batch id is skipped).
   *
   * Per-trigger cost therefore tracks the BATCH — bytes written =
   * batch rows + the touched files' survivors; bytes read = the touched
   * files — never the store. Superseded files stay referenced by older
   * manifests (time travel through [[VersionedStore.readVersion]]) until
   * [[VersionedStore.vacuum]] reclaims them.
+  *
+  * The parent's bands are collected to the driver — bounded by the
+  * store's FILE COUNT, the table-format norm, fine to O(10^4) files. A
+  * compaction's band-less manifest is rebuilt from its member files on
+  * read (never written back here); the next commit's manifest carries
+  * the bands again.
   */
-/** The upsert manifest row: member file + its key band. The extra
-  * stats columns ride alongside [[VersionedStore]]'s `file` column, so
-  * every batch reader (versionFiles/readVersion/vacuum) works unchanged
-  * while the writer prunes rewrites by key range. Top-level (not nested
-  * in the object) so its Encoder stays codegen-compatible. */
-private[streaming] case class FileStats(file: String, mn: Long, mx: Long)
-
 object UpsertSink {
 
   /** Read the store's CURRENT state — the newest committed manifest's
@@ -44,72 +43,6 @@ object UpsertSink {
     VersionedStore.readVersion(s, path, vs.max)
   }
 
-  /** SCALE NOTE (round-12 verdict): the collect below is bounded by the
-    * store's FILE COUNT — the table-format norm (Delta/Iceberg hold
-    * manifests driver-side between checkpoints), fine to O(10^4) files.
-    * A store whose manifest outgrows a driver broadcast moves to the
-    * ManifestStore precedent: keep the stats as a DataFrame, run the
-    * band-overlap prune cluster-side, and collect only the SELECTED
-    * paths; the new manifest then writes as parent-anti-join ∪
-    * new-stats without materializing the full file list on the driver. */
-  private def statsManifest(s: SparkSession, path: String, v: Int,
-      keyCol: String): Array[FileStats] = {
-    import s.implicits._
-    val mf = s.read.parquet(VersionedStore.manifestPath(path, v))
-    if (mf.columns.contains("mn") && mf.columns.contains("mx"))
-      mf.select(col("file"), col("mn"), col("mx")).as[FileStats].collect()
-    else {
-      // SELF-HEAL: a maintenance compaction (VersionedStore.compactCommit
-      // / CALL graft_store_optimize) writes a file-only manifest — without
-      // this branch the next micro-batch's stats read would crashloop the
-      // stream (round-12 review finding). Rebuild per-file key bands from
-      // the member files in memory; the NEXT upsert commit writes them
-      // back into its manifest, so the rebuild cost (one read of the
-      // compacted files) is paid only between a compaction and the next
-      // commit, never steadily.
-      val files = mf.select(col("file")).as[String].collect()
-      if (files.isEmpty) Array.empty
-      else {
-        val data = s.read.parquet(files.toIndexedSeq: _*)
-        data.groupBy(input_file_name().as("file"))
-          .agg(min(VersionedStore.keyLong(data, keyCol)).as("mn"),
-            max(VersionedStore.keyLong(data, keyCol)).as("mx"))
-      }
-        .collect()
-        .map(r => FileStats(VersionedStore.canon(r.getString(0)),
-          r.getLong(1), r.getLong(2)))
-    }
-  }
-
-  /** The prune (and the COW rewrite decision) compares key bands in
-    * LONG space: integral keys cast, string/binary keys hash — the
-    * shared store contract check ([[VersionedStore.requireSupportedKey]],
-    * also guarding the SQL/stream purge path into deleteCommit). */
-  private def requireSupportedKey(df: DataFrame, keyCol: String): Unit =
-    VersionedStore.requireSupportedKey(df, keyCol)
-
-  private def writeManifest(s: SparkSession, path: String, v: Int,
-      rows: Seq[FileStats]): Unit = {
-    import s.implicits._
-    rows.sortBy(_.file).toDF()
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(VersionedStore.manifestPath(path, v))
-  }
-
-  /** Files of the newest committed version whose key band can contain
-    * a key of `keys` — the stats-manifest prune. Bounded driver state
-    * (the manifest's file count); the decision join is broadcast. */
-  private def owningFiles(keys: DataFrame, parent: Array[FileStats],
-      keyCol: String): Array[String] = {
-    if (parent.isEmpty) return Array.empty
-    val s = keys.sparkSession
-    import s.implicits._
-    val statsDf = parent.toSeq.toDF("file", "mn", "mx")
-    keys.select(VersionedStore.keyLong(keys, keyCol).as("k")).distinct()
-      .join(broadcast(statsDf), col("k") >= col("mn") && col("k") <= col("mx"))
-      .select(col("file")).distinct().as[String].collect()
-  }
-
   /** Read ONLY the current rows that could share a key with `keys` —
     * the read-side twin of the COW prune, for per-batch classification
     * (change capture) and point lookups: cost tracks the TOUCHED
@@ -118,16 +51,16 @@ object UpsertSink {
     * an empty (0-file) frame with the store schema. */
   def readTouched(s: SparkSession, path: String, keys: DataFrame,
       keyCol: String): Option[DataFrame] = {
-    requireSupportedKey(keys, keyCol)
+    VersionedStore.requireSupportedKey(keys, keyCol)
     val vs = VersionedStore.versions(s, path)
     if (vs.isEmpty) return None
-    val parent = statsManifest(s, path, vs.max, keyCol)
+    val parent = RangeManifest.versionBands(s, path, vs.max, keyCol, heal = false)
     // a committed manifest CAN list zero files (a purge that emptied
     // the store): no prior rows, same contract as no-store-yet —
     // read.parquet over an empty path list would throw instead
     if (parent.isEmpty) return None
     VersionedStore.requireKeyClassMatch(s, path, vs.max, keys, keyCol)
-    val owning = owningFiles(keys, parent, keyCol)
+    val owning = RangeManifest.filesFor(keys, keyCol, parent)
     val files = if (owning.nonEmpty) owning
       else parent.map(_.file).take(1) // schema carrier, filtered empty
     val df = s.read.parquet(files.toIndexedSeq: _*)
@@ -167,7 +100,7 @@ object UpsertSink {
       settleTimeoutMs: Long, dropKeys: Option[DataFrame],
       operation: String): Option[Int] = {
     if (batch.isEmpty && dropKeys.forall(_.isEmpty)) return None
-    requireSupportedKey(batch, keyCol)
+    VersionedStore.requireSupportedKey(batch, keyCol)
     val s = batch.sparkSession
     // marker-gate commit detection from store birth (the appendCommit
     // race guard): this committer writes txn records, so the txn dir
@@ -210,16 +143,14 @@ object UpsertSink {
       if (VersionedCommitSink.alreadyCommitted(s, path, latest, batchId)) return None
       val v = VersionedStore.claimVersion(s, path, latest.getOrElse(0) + 1)
 
-      // Parent manifest with per-file key stats: driver-side and bounded
-      // by the store's file count (the manifest-store contract). Touched
-      // files = those whose [mn, mx] band contains a batch key — a
-      // broadcast join of the batch's keys against the k-row stats table,
-      // collecting only distinct FILE NAMES (file-count bounded).
-      val parent: Array[FileStats] = latest
-        .map(pv => statsManifest(s, path, pv, keyCol)).getOrElse(Array.empty)
+      // Parent bands, driver-side and bounded by the store's file count;
+      // touched files = those whose band can hold a batch key
+      val parent: Array[Band] = latest
+        .map(pv => RangeManifest.versionBands(s, path, pv, keyCol, heal = false))
+        .getOrElse(Array.empty)
       if (parent.nonEmpty)
         VersionedStore.requireKeyClassMatch(s, path, latest.get, batch, keyCol)
-      val owning: Array[String] = owningFiles(allKeys, parent, keyCol)
+      val owning: Array[String] = RangeManifest.filesFor(allKeys, keyCol, parent)
 
       // Rewrite = touched files' survivors + the batch (keyed replace:
       // the stream emits full merged entities, newest state wins; drop
@@ -256,10 +187,10 @@ object UpsertSink {
       // carries the SETTLED manifest minus the owning files — nothing
       // re-planned. Without this, N equal-speed writers admit exactly
       // one winner per round and a chronic loser burns all attempts.
-      val commitParent: Option[Array[FileStats]] =
+      val commitParent: Option[Array[Band]] =
         if (settled == latest) Some(parent)
         else settled.flatMap { sv =>
-          val sParent = statsManifest(s, path, sv, keyCol)
+          val sParent = RangeManifest.versionBands(s, path, sv, keyCol, heal = false)
           val sSet = sParent.map(_.file).toSet
           val latestSet = parent.map(_.file).toSet
           val ownSurvived = owning.forall(sSet.contains)
@@ -268,25 +199,14 @@ object UpsertSink {
           if (ownSurvived && !addedOverlap) Some(sParent) else None
         }
       if (commitParent.isDefined) {
-        val parentStats = commitParent.get
-        // Stats for the new files: a read-back of ONLY the files this
-        // commit wrote (O(batch)), grouped by physical file.
-        // a merge whose every touched row was deleted writes no files
+        // bands of the new files: a read-back of ONLY the files this
+        // commit wrote (O(batch)); a merge whose every touched row was
+        // deleted writes none
         val newFiles = VersionedStore.hadoopLs(s, dataDir)
-        val newStats = if (newFiles.isEmpty) Array.empty[FileStats] else {
-          val newData = s.read.parquet(newFiles.toIndexedSeq: _*)
-          newData
-            .groupBy(input_file_name().as("file"))
-            .agg(min(VersionedStore.keyLong(newData, keyCol)).as("mn"),
-              max(VersionedStore.keyLong(newData, keyCol)).as("mx"))
-            .collect()
-            .map(r => FileStats(VersionedStore.canon(r.getString(0)),
-              r.getLong(1), r.getLong(2)))
-        }
-
+        val newBands = RangeManifest.collect(s, newFiles.toIndexedSeq, keyCol)
         val ownSet = owning.toSet
-        writeManifest(s, path, v,
-          parentStats.filterNot(fs => ownSet(fs.file)).toSeq ++ newStats)
+        RangeManifest.writeVersion(s, path, v,
+          commitParent.get.filterNot(b => ownSet(b.file)).toSeq ++ newBands)
         graft.sources.ColStats.onCommit(s, path, newFiles.toSeq.sorted)
         // write-path CDC (round 15): classify the batch against the
         // pre-images it replaced — MINUS the parent's deletion vector

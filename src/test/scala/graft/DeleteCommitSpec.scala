@@ -135,7 +135,7 @@ class DeleteCommitSpec extends AnyFunSuite {
     // the per-file bands with a full-store scan on EVERY planning call;
     // the rebuild must persist back into the manifest (one-time heal).
     val path = buildStore()
-    val first = VersionedStore.fileKeyStats(spark, path, 1, "key")
+    val first = sources.RangeManifest.versionBands(spark, path, 1, "key", heal = true)
     assert(first.length == 8)
     val mf = spark.read.parquet(VersionedStore.manifestPath(path, 1))
     assert(mf.columns.toSet == Set("file", "mn", "mx"),
@@ -146,8 +146,8 @@ class DeleteCommitSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(VersionedStore.dataPath(path)),
       new org.apache.hadoop.fs.Path(path + "/data_hidden"))
-    val second = VersionedStore.fileKeyStats(spark, path, 1, "key")
-    assert(second.sortBy(_._1).toSeq == first.sortBy(_._1).toSeq,
+    val second = sources.RangeManifest.versionBands(spark, path, 1, "key", heal = true)
+    assert(second.sortBy(_.file).toSeq == first.sortBy(_.file).toSeq,
       "healed-manifest bands differ from the rebuilt ones")
   }
 

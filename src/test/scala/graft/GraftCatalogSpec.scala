@@ -47,6 +47,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     val pruned = spark.table("graft_probe").inputFiles.length
     assert(pruned < all,
       s"probe view reads $pruned of $all files — manifest skip not applied")
+    // an empty term set reaches the view's own contract check
+    val e = intercept[IllegalArgumentException](
+      GraftCatalog.probeView(spark, sf, "graft_probe_none", Nil))
+    assert(e.getMessage.contains("selected no posting files"), e.getMessage)
   }
 
   test("q109 semantics as a SQL string over the as-of version views") {

@@ -91,7 +91,7 @@ class IndexRefreshSpec extends AnyFunSuite {
     val m = spark.read.option("recursiveFileLookup", "true")
       .parquet(InvertedIndexStore.manifestPath(path))
     val total = m.count()
-    val selected = InvertedIndexStore.filesFor(
+    val selected = sources.RangeManifest.filesFor(
       m, graft.operators.Text.Bm25Query)
     assert(selected.nonEmpty && selected.length < total,
       s"manifest pruned nothing: ${selected.length} of $total")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.InvertedIndexStore
+import graft.sources.{InvertedIndexStore, RangeManifest}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,7 +36,9 @@ class InvertedIndexStoreSpec extends AnyFunSuite {
       val manifest = spark.read.parquet(InvertedIndexStore.manifestPath(path))
       val total = manifest.count()
       val terms = operators.Text.Bm25Query
-      val selected = InvertedIndexStore.filesFor(manifest, terms)
+      val selected = RangeManifest.filesFor(manifest, terms)
+      // no terms select no files and run no job
+      assert(RangeManifest.filesFor(manifest, Nil).isEmpty)
       // the query's 3 terms land in at most 3 term-range files; a probe
       // that opened the whole index would defeat the store's purpose
       assert(selected.nonEmpty && selected.length < total,
@@ -118,7 +120,7 @@ class InvertedIndexStoreSpec extends AnyFunSuite {
     // the positional probe pruned: fewer files opened than the relation has
     val allPos = spark.read.parquet(InvertedIndexStore.posPath(
       InvertedIndexStore.store(spark, sf))).inputFiles.length
-    val sel = InvertedIndexStore.filesFor(
+    val sel = RangeManifest.filesFor(
       spark.read.parquet(InvertedIndexStore.posManifestPath(
         InvertedIndexStore.store(spark, sf))), terms).length
     assert(sel < allPos, s"pos probe opened $sel of $allPos files — no skip")

@@ -30,6 +30,8 @@ class KeyedStoreSpec extends AnyFunSuite {
       val keys = KeyedStore.probeKeys(r.getLong(0), r.getLong(1))
       assert(keys.size == 10, s"probe key derivation degenerate: $keys")
       val selected = KeyedStore.filesFor(m, keys)
+      // an empty multi-get selects no files and runs no job
+      assert(KeyedStore.filesFor(m, Nil).isEmpty)
       assert(selected.nonEmpty && selected.length <= keys.size &&
         selected.length < total,
         s"multi-get not file-bounded: ${selected.length} files for ${keys.size} keys of $total")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.ManifestStore
+import graft.sources.{ManifestStore, RangeManifest}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +31,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     val mm = manifest.agg(min(col("mn")), max(col("mx"))).head()
     val (umn, umx) = (mm.getLong(0), mm.getLong(1))
     val (lo, hi) = (umn + (umx - umn + 1) * 3 / 10, umn + (umx - umn + 1) * 6 / 10)
-    val selected = ManifestStore.filesFor(manifest, lo, hi)
+    val selected = RangeManifest.filesOverlapping(manifest, lo, hi)
     assert(selected.nonEmpty && selected.length < total,
       s"manifest pruned nothing: ${selected.length} of $total")
 

@@ -20,9 +20,9 @@ class PropertySpec extends AnyFunSuite {
     key <- Gen.chooseNum(0L, 1000L)
   } yield ScoredKey(score, key)
 
-  private def check(p: Prop): Unit = {
+  private def check(p: Prop, cases: Int = 300): Unit = {
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(300), p)
+      SCTest.Parameters.default.withMinSuccessfulTests(cases), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -71,6 +71,94 @@ class PropertySpec extends AnyFunSuite {
       val oracle = xs.sortBy(x => (x.hk, x.id)).take(5)
       merged == whole && whole == oracle
     })
+  }
+
+  /** One generated store for the [[sources.RangeManifest]] laws: keys
+    * range-clustered into up to `files` files, a probe key set (present
+    * and absent keys), and a range [lo, hi] whose bounds are stored keys. */
+  private case class Clustered[K](keys: List[K], files: Int, probe: List[K],
+      lo: K, hi: K)
+
+  private def clustered[K](key: Gen[K])(implicit ord: Ordering[K]): Gen[Clustered[K]] =
+    for {
+      keys <- Gen.nonEmptyListOf(key)
+      files <- Gen.chooseNum(1, 6)
+      present <- Gen.someOf(keys)
+      absent <- Gen.listOfN(3, key)
+      a <- Gen.oneOf(keys)
+      b <- Gen.oneOf(keys)
+    } yield Clustered(keys, files, (present ++ absent).toList, ord.min(a, b), ord.max(a, b))
+
+  /** Checks the manifest laws against a brute-force `input_file_name()`
+    * scan of the written files:
+    *  1. every row's key lies inside its own file's band (in the key's
+    *     own type, and in the long key space versioned stores use);
+    *  2. pruning for a key set returns every file that holds a probed
+    *     key, in each physical form (literal predicate, broadcast join,
+    *     in-driver), and the long-space forms agree exactly;
+    *  3. on range-clustered files the range prune IS the brute-force
+    *     set of files holding a key in [lo, hi]. */
+  private def manifestLaws[K](c: Clustered[K], dt: org.apache.spark.sql.types.DataType)(
+      implicit ord: Ordering[K]): Boolean = {
+    import TestSpark.spark
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    import sources.{RangeManifest, VersionedStore}
+    val dir = java.nio.file.Files.createTempDirectory("range_manifest_law").toString
+    try {
+      val schema = StructType(Seq(StructField("key", dt, nullable = false)))
+      spark.createDataFrame(c.keys.map(k => Row(k)).asJava, schema)
+        .repartitionByRange(c.files, col("key"))
+        .write.parquet(s"$dir/data")
+      RangeManifest.write(spark, s"$dir/data", "key", s"$dir/manifest")
+      val m = spark.read.parquet(s"$dir/manifest")
+      val band = m.collect().map(r => r.getString(0) -> ((r.getAs[K](1), r.getAs[K](2)))).toMap
+      val data = spark.read.parquet(s"$dir/data")
+      val rows = data.select(VersionedStore.canonCol(input_file_name()), col("key"),
+          VersionedStore.keyLong(data, "key")).collect()
+        .map(r => (r.getString(0), r.getAs[K](1), r.getLong(2)))
+      def holding(p: K => Boolean): Set[String] =
+        rows.collect { case (f, k, _) if p(k) => f }.toSet
+      def within[T](x: T, b: (T, T))(implicit o: Ordering[T]) =
+        o.lteq(b._1, x) && o.lteq(x, b._2)
+
+      val bands = RangeManifest.collect(spark, VersionedStore.hadoopLs(spark, s"$dir/data").toSeq, "key")
+      val longBand = bands.map(b => b.file -> ((b.mn, b.mx))).toMap
+      val law1 = rows.forall { case (f, k, kl) =>
+        band.get(f).exists(within(k, _)) && longBand.get(f).exists(within(kl, _)) }
+
+      val probe = c.probe.toSet
+      val brute = holding(probe)
+      val literal = RangeManifest.filesFor(m, c.probe).toSet
+      val probeDf = spark.createDataFrame(c.probe.map(k => Row(k)).asJava, schema)
+      val probeLongs = probeDf.select(VersionedStore.keyLong(probeDf, "key"))
+        .collect().map(_.getLong(0)).toSeq
+      val joined = RangeManifest.filesFor(probeDf, "key", bands).toSet
+      val law2 = brute.subsetOf(literal) && brute.subsetOf(joined) &&
+        joined == RangeManifest.filesFor(bands, probeLongs).toSet
+
+      val law3 = RangeManifest.filesOverlapping(m, c.lo, c.hi).toSet ==
+        holding(k => ord.lteq(c.lo, k) && ord.lteq(k, c.hi))
+      law1 && law2 && law3
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete()
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
+  test("RangeManifest laws on long keys: bands hold their rows, no false negatives, exact range prune") {
+    check(Prop.forAllNoShrink(clustered(Gen.chooseNum(-1000L, 1000L)))(
+      manifestLaws(_, org.apache.spark.sql.types.LongType)), cases = 10)
+  }
+
+  test("RangeManifest laws on string keys: bands hold their rows, no false negatives, exact range prune") {
+    check(Prop.forAllNoShrink(clustered(Gen.resize(6, Gen.alphaNumStr)))(
+      manifestLaws(_, org.apache.spark.sql.types.StringType)), cases = 10)
   }
 
   test("Morton key preserves box locality: max interleave bounds both coordinates") {
